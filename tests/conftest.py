@@ -19,3 +19,26 @@ def spark():
              .getOrCreate())
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """`spark_jobs(fn)` runs fn in a fresh job group and returns how many
+    Spark jobs it started, as the status tracker records them."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -164,3 +164,17 @@ def test_looks_like_sql_anchored():
     assert not looks_like_sql("selected_pages")
     assert not looks_like_sql("page_selection")
     assert not looks_like_sql("my table")  # odd name, still not a query
+
+
+def test_cli_zoom_batch_job_count(spark, spark_jobs, tmp_path):
+    """One zoom batch pays one action per write and no bookkeeping jobs:
+    a reintroduced count, schema-inference read or per-zoom checkpoint
+    re-read fails this. Measured on this fixture at z3 (local mode, AQE
+    on): 13 jobs with a staged-row count, an inferred staging read and a
+    checkpoint re-read per zoom; 9 with the observed staging count."""
+    src, cfg = _write_inputs(spark, tmp_path)
+    n = spark_jobs(lambda: cli_main([
+        "--config", str(cfg), "--source", f"feats={src}",
+        "--dest", str(tmp_path / "store"), "--minzoom", "3",
+        "--maxzoom", "3"]))
+    assert n <= 9

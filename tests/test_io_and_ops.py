@@ -96,6 +96,49 @@ def test_crash_between_write_and_mark_is_safe(spark, tmp_path):
     assert not glob.glob(str(tmp_path / "crash" / "staging_z*"))
 
 
+def test_commit_loop_empty_zoom(spark, tmp_path, monkeypatch):
+    """Two zoom batches, the second empty: each zoom gets one metrics row
+    whose `rows` is that zoom's committed map rows; the empty zoom writes
+    no map, images or checkpoint rows; the checkpoint is read once per
+    run."""
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    reads = []
+    orig = TileStore.done_keys
+
+    def counting_done_keys(self, spark):
+        reads.append(1)
+        return orig(self, spark)
+
+    monkeypatch.setattr(TileStore, "done_keys", counting_done_keys)
+    base = tmp_path / "loop"
+    store = TileStore(str(base))
+
+    def build(zoom, done):
+        return _tiny_tiles(spark).filter(F.col("zoom") == zoom)
+
+    run_pyramid_with_checkpoint(spark, store, build, [1, 2], run_id="r1")
+    assert len(reads) == 1
+
+    metrics = {r["zoom"]: r["rows"] for r in
+               spark.read.parquet(str(base / "metrics"))
+               .filter(F.col("run_id") == "r1").collect()}
+    mp = spark.read.parquet(str(base / "map"))
+    committed = {r["zoom"]: r["n"] for r in
+                 mp.groupBy("zoom").agg(F.count("*").alias("n")).collect()}
+    assert metrics == {1: 2, 2: 0}
+    assert committed == {1: 2}
+    assert not (base / "map" / "zoom=2").exists()
+    # both zoom-1 tiles share one blob; nothing else reached images
+    assert spark.read.parquet(str(base / "images")).count() == 1
+    assert {(r["zoom"], r["x"], r["y"]) for r in
+            store.done_keys(spark).collect()} == {(1, 0, 0), (1, 1, 0)}
+
+    reads.clear()
+    run_pyramid_with_checkpoint(spark, store, build, [1, 2], run_id="r2")
+    assert len(reads) == 1
+
+
 def test_mbtiles_export(spark, tmp_path):
     from tileigi_spark.io import export_mbtiles
 

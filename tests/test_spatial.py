@@ -146,6 +146,76 @@ def test_knn_straggler_needs_full_grid_pass(spark):
     assert top[(2, 1)] == 0
 
 
+def _knn_two_round_fixture(spark):
+    """k=3 at index_zoom=4 (16x16 cells of ~2.5e6 m) needs exactly two
+    ring rounds (radius 1, then 4):
+    - candidates 100-111 form a 4x3 cluster on a 1000 m lattice;
+    - query 1 sits inside the cluster and is final in round 1;
+    - query 2 sits on candidate 105, and four candidates tie at 1000 m
+      for ranks 2-3, so cand_id decides (101, 104);
+    - query 3 is two cells east of the cluster with no candidate in its
+      radius-1 disk: round 1 yields no row for it at all;
+    - query 4 is beside lone candidate 200, three cells from the
+      cluster: round 1 finds only that one (non-final rows), round 2
+      completes it."""
+    span = 2 * MERC_MAX / 16
+    x0, y0 = 1_000_000.0, -1_000_000.0
+    crows = [(100 + i, x0 + 1000.0 * (i % 4), y0 + 1000.0 * (i // 4))
+             for i in range(12)]
+    crows.append((200, x0 + 3 * span, y0 + 2 * span))
+    qrows = [(1, x0 + 1500.0, y0 + 1500.0),
+             (2, x0 + 1000.0, y0 + 1000.0),
+             (3, x0 + 2.2 * span, y0),
+             (4, x0 + 3 * span + 1000.0, y0 + 2 * span)]
+    cands = spark.createDataFrame(crows, "cand_id long, cx double, cy double")
+    queries = spark.createDataFrame(qrows,
+                                    "query_id long, qx double, qy double")
+    return queries, qrows, cands, crows
+
+
+def _knn_brute(qrows, crows, k):
+    expected = set()
+    for qid, qxv, qyv in qrows:
+        scored = sorted(((qxv - cxv) ** 2 + (qyv - cyv) ** 2, cid)
+                        for cid, cxv, cyv in crows)
+        for rank, (_, cid) in enumerate(scored[:k], start=1):
+            expected.add((qid, cid, rank))
+    return expected
+
+
+def test_knn_two_rounds_matches_bruteforce(spark, tmp_path):
+    """Round bookkeeping rides the round writes: a query with no
+    candidate in its first disk and one with only non-final rows both
+    finish in round 2, and each round run leaves one round=R dir."""
+    import os
+
+    queries, qrows, cands, crows = _knn_two_round_fixture(spark)
+    work = str(tmp_path / "knn_rounds")
+    got = knn_join(queries, cands, k=3, index_zoom=4, work_dir=work)
+    got_pairs = {(r["query_id"], r["cand_id"], r["knn_rank"])
+                 for r in got.collect()}
+    expected = _knn_brute(qrows, crows, 3)
+    assert {(q, c) for q, c, r in expected if q == 2 and r > 1} == \
+        {(2, 101), (2, 104)}  # the tie is decided by cand_id
+    assert got_pairs == expected
+    assert sorted(os.listdir(os.path.join(work, "out"))) == \
+        ["round=1", "round=2"]
+    assert set(got.columns) == {"query_id", "qx", "qy", "cand_id", "cx",
+                                "cy", "dist2", "knn_rank"}
+
+
+def test_knn_job_count(spark, spark_jobs, tmp_path):
+    """One write per ring round plus the query staging: a reintroduced
+    count, read-back or append job fails this. Measured on the two-round
+    fixture (local mode, AQE on): 23 jobs when each round ran separate
+    count, append and remainder read-back jobs; 8 with observed round
+    writes (staging 1, round 1: 3, round 2: 4)."""
+    queries, _, cands, _ = _knn_two_round_fixture(spark)
+    n = spark_jobs(lambda: knn_join(queries, cands, k=3, index_zoom=4,
+                                    work_dir=str(tmp_path / "w")))
+    assert n <= 8
+
+
 def test_knn_work_dir_staging(spark, tmp_path):
     """Cluster-safe staging: an explicit work_dir receives the round
     parquet (the driver-local tempfile default is only correct in local

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql.types import BooleanType
 
 from .engine import with_bbox, _collect_coords
@@ -343,12 +343,20 @@ def _approx_row_count(df: DataFrame) -> int:
     return df.count()
 
 
+def _write_observed(df: DataFrame, path: str, metric) -> int:
+    """Overwrite `path` with `df` and return the aggregate `metric`
+    observed on that same write: the count rides the write action
+    instead of costing a separate job over the written data."""
+    obs = Observation()
+    df.observe(obs, metric.alias("n")).write.mode("overwrite").parquet(path)
+    return int(obs.get["n"])
+
+
 def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
              index_zoom: int | None = None, query_id: str = "query_id",
              cand_id: str = "cand_id",
              qx: str = "qx", qy: str = "qy",
              cx: str = "cx", cy: str = "cy",
-             max_radius: int = 64,
              work_dir: str | None = None) -> DataFrame:
     """J5: k nearest candidates per query by planar 3857 distance.
 
@@ -362,28 +370,29 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
     stays ~9 * max(k, ~10) per query instead of exploding when the fixed
     grid is much coarser than the data (the H3-resolution-selection analog).
 
+    Actions: the query side is staged once to `{work}/queries`, its row
+    count observed on that write. Each ring round is then ONE write of
+    its ranked top-k into `{work}/out/round=R`. Every row carries
+    `_final`: the query has k candidates and its k-th lies inside the
+    guaranteed-safe disk (distance <= radius*cell_span), or the disk
+    covers the whole grid. The write observes how many queries it
+    finalized, so the driver tracks the remainder arithmetically — no
+    count, read-back or append jobs. A round's queries are the staged
+    copy left-anti-joined (broadcast) against the final ids of the
+    rounds so far; every read passes its known schema, so none pays a
+    schema-inference job. The result is the round dirs' final rows.
+
     Per-round state goes through parquet round-trips, NOT localCheckpoint:
     checkpointing to executor storage memory pins gigabytes of blocks,
     serializes on local-mode's single BlockManager (measured anti-scaling
     past 8 cores), and is lost on restart. Storage round-trips are the
-    cluster-correct stage boundary; each round writes its finished batch
-    (append) + the shrinking remainder (overwrite), so the driver loop
-    never re-executes a prior round's plan. The staging location is
-    resolved by knn_work_dir (pass work_dir on clusters whose warehouse
-    dir isn't where staging should go); intermediate round/remainder dirs
-    are deleted scheme-aware, the final `out` dir lives until the caller
+    cluster-correct stage boundary, so the driver loop never re-executes
+    a prior round's plan. The staging location is resolved by
+    knn_work_dir (pass work_dir on clusters whose warehouse dir isn't
+    where staging should go); the staged query copy is deleted
+    scheme-aware on return, the `out` dir lives until the caller
     finishes consuming the returned (lazy) DataFrame.
     """
-    import os
-    import sys
-    import time as _time
-
-    verbose = os.environ.get("TILEIGI_KNN_DEBUG") == "1"
-
-    def _dbg(msg):
-        if verbose:
-            print(f"knn_join: {msg}", file=sys.stderr, flush=True)
-
     if index_zoom is None:
         import math
         n_cands = _approx_row_count(candidates)
@@ -397,15 +406,31 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
 
     spark = queries.sparkSession
     work = knn_work_dir(spark, work_dir)
-    out_dir = f"{work}/out"
-    round_dirs: list[str] = []
+    q_dir = f"{work}/queries"
     n = 1 << index_zoom
-    remaining = q
-    n_rem = remaining.count()
-    wrote_any = False
-    radius = 1
+    span = WORLD / n
+    dist2 = ((F.col(qx) - F.col(cx)) ** 2 + (F.col(qy) - F.col(cy)) ** 2)
+    w = Window.partitionBy(query_id).orderBy(dist2.asc(),
+                                             F.col(cand_id).asc())
+    # the done-predicate windows ride the SAME sort the rank window
+    # established (equal partition key, no ordering requirement)
+    done_w = Window.partitionBy(query_id)
+    # one row per finalized query: its rank-1 row
+    final_q = F.col("_final") & (F.col("knn_rank") == 1)
+    round_dirs: list[str] = []
+    out_schema = None
     try:
-        while radius <= max(max_radius, n):
+        n_rem = _write_observed(q, q_dir, F.count(F.lit(1)))
+        staged = spark.read.schema(q.schema).parquet(q_dir)
+        radius = 1
+        while True:
+            remaining = staged
+            if round_dirs:
+                final_ids = (spark.read.schema(out_schema)
+                             .parquet(*round_dirs)
+                             .filter(final_q).select(query_id))
+                remaining = staged.join(F.broadcast(final_ids),
+                                        on=query_id, how="left_anti")
             exploded = disk_cells(remaining, "_qcx", "_qcy", radius,
                                   index_zoom)
             # the query side is usually tiny relative to the candidate
@@ -417,81 +442,33 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
                                     how="inner")
             else:
                 joined = exploded.join(cands, on="cell", how="inner")
-            dist2 = ((F.col(qx) - F.col(cx)) ** 2
-                     + (F.col(qy) - F.col(cy)) ** 2)
-            w = Window.partitionBy(query_id).orderBy(dist2.asc(),
-                                                     F.col(cand_id).asc())
+            if radius >= n:
+                # disk covers the whole grid: everything found is final
+                final = F.lit(True)
+            else:
+                final = ((F.count("*").over(done_w) >= k)
+                         & (F.max("dist2").over(done_w)
+                            <= (radius * span) ** 2))
             ranked = (joined
                       .withColumn("dist2", dist2)
                       .withColumn("knn_rank", F.row_number().over(w))
                       .filter(F.col("knn_rank") <= k)
-                      .drop("_qcx", "_qcy", "cell"))
-            if radius >= n:
-                # disk covers the whole grid: everything found is final
-                ranked.write.mode("append").parquet(out_dir)
-                wrote_any = True
+                      .drop("_qcx", "_qcy", "cell")
+                      .withColumn("_final", final))
+            if out_schema is None:
+                out_schema = ranked.schema
+            round_dirs.append(f"{work}/out/round={len(round_dirs) + 1}")
+            n_rem -= _write_observed(ranked, round_dirs[-1],
+                                     F.count(F.when(final_q, 1)))
+            if radius >= n or n_rem <= 0:
                 break
-            # materialize the round's core work exactly ONCE — every
-            # downstream use (done-predicate, result append, remainder
-            # anti-join) reads the ~k*|queries| materialized rows instead
-            # of re-executing the scan+join+window chain. The
-            # done-predicate windows (_cnt/_kth) ride the SAME sort the
-            # rank window established (equal partition key, no ordering
-            # requirement), so they are computed before the write for
-            # free instead of as a second exchange over the read-back.
-            t0 = _time.time()
-            done_w = Window.partitionBy(query_id)
-            ranked = (ranked
-                      .withColumn("_cnt", F.count("*").over(done_w))
-                      .withColumn("_kth", F.max("dist2").over(done_w)))
-            round_dirs.append(f"{work}/round_{radius}")
-            ranked.write.mode("overwrite").parquet(f"{work}/round_{radius}")
-            rr = spark.read.parquet(f"{work}/round_{radius}")
-            _dbg(f"radius={radius} n_rem={n_rem} round-write "
-                 f"{_time.time() - t0:.1f}s")
-            # queries fully satisfied AND whose k-th neighbor is provably
-            # inside the ring (distance <= radius*cell_span) are final
-            span = (2.0 * 20037508.342789244) / n
-            safe_d = (radius * span) ** 2
-            t0 = _time.time()
-            finished = (rr.filter((F.col("_cnt") >= k)
-                                  & (F.col("_kth") <= safe_d))
-                        .drop("_cnt", "_kth"))
-            finished.write.mode("append").parquet(out_dir)
-            wrote_any = True
-            # this round's finished ids only (tiny, broadcast anti-join;
-            # no rescan of the accumulated result table). Counting them
-            # closes the common every-query-done round WITHOUT staging a
-            # remainder: n_rem is tracked arithmetically, so the final
-            # round skips the remainder write+read+count cycle.
-            done_q = finished.select(query_id).distinct()
-            n_done = done_q.count()
-            if n_done >= n_rem:
-                _dbg(f"radius={radius} all {n_rem} done")
-                break
-            nxt = remaining.join(F.broadcast(done_q), on=query_id,
-                                 how="left_anti")
-            round_dirs.append(f"{work}/rem_{radius}")
-            nxt.write.mode("overwrite").parquet(f"{work}/rem_{radius}")
-            remaining = spark.read.parquet(f"{work}/rem_{radius}")
-            n_rem -= n_done
-            _dbg(f"radius={radius} bookkeeping {_time.time() - t0:.1f}s"
-                 f" next_rem={n_rem}")
             # x4 growth clamped at the grid size: each extra round
             # quadruples the guaranteed-safe disk (stragglers converge in
             # O(log4 n) candidate scans), and the clamp guarantees the
             # radius >= n full-grid pass fires instead of being jumped
             # over when n is an odd power of two
             radius = min(radius * 4, n)
-        if not wrote_any:
-            return queries.limit(0).select(
-                "*", F.lit(0.0).alias("dist2"), F.lit(0).alias("knn_rank"))
-        out = spark.read.parquet(out_dir)
-        # materialize into the caller-visible frame before the temp dir
-        # can be cleaned (the parquet files persist until process exit)
-        return out
+        return (spark.read.schema(out_schema).parquet(*round_dirs)
+                .filter(F.col("_final")).drop("_final"))
     finally:
-        # keep out_dir (the returned frame reads it lazily); drop the
-        # per-round staging dirs on whatever filesystem they live on
-        for p in round_dirs:
-            _fs_delete(spark, p)
+        _fs_delete(spark, q_dir)

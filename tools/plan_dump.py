@@ -80,21 +80,11 @@ def bench_legs(spark, sf_dir):
     pts = feats.select(F.col("feature_id").alias("pid"),
                        F.col("xmin").alias("mx"), F.col("ymin").alias("my"))
     import __spark_entry__ as entrymod
-    from tileigi_spark.spatial import knn_join, point_in_polygon_join
+    from tileigi_spark.spatial import point_in_polygon_join
 
     polys = entrymod._nation_boxes(spark, sf_dir)
     legs["pip_join_bench"] = point_in_polygon_join(
         pts, polys, index_zoom=6, px_col="mx", py_col="my")
-    queries = (pts.filter(F.pmod(F.col("pid"), F.lit(997)) < 20)
-               .select(F.col("pid").alias("query_id"),
-                       F.col("mx").alias("qx"), F.col("my").alias("qy")))
-    cands = pts.select(F.col("pid").alias("cand_id"),
-                       F.col("mx").alias("cx"), F.col("my").alias("cy"))
-    legs["knn_join_bench_round"] = None  # driver loop; per-round plan below
-    try:
-        legs.pop("knn_join_bench_round")
-    except KeyError:
-        pass
     return legs
 
 
