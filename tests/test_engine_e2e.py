@@ -159,3 +159,25 @@ def test_shuffle_parts_byte_invariant(spark, feats):
     got = {(r["zoom"], r["x"], r["y"]): (r["tile_md5"], bytes(r["tile"]))
            for r in packed.collect()}
     assert got == base
+
+
+def test_non_finite_vertex_rows_dropped(spark, feats):
+    """A feature with a NaN or Inf vertex is dropped like an undecodable
+    row (the reference skips those silently, lib.rs:572-579): the job
+    finishes and every other tile keeps its bytes."""
+    from tileigi_spark.geom.wkb import geom_to_wkb
+
+    nan, inf = float("nan"), float("inf")
+    sq = [(0.0, 0.0), (1e5, 0.0), (1e5, 1e5), (0.0, 1e5), (0.0, 0.0)]
+    bad = [("Polygon", [[(0.0, 0.0), (1e5, 0.0), (nan, 1e5), (0.0, 1e5),
+                         (0.0, 0.0)]]),
+           ("Polygon", [sq, [(1.0, 1.0), (inf, 2.0), (2.0, 2.0),
+                             (1.0, 1.0)]]),
+           ("LineString", [(0.0, 0.0), (-inf, 5.0)]),
+           ("Point", (inf, 0.0)),
+           ("Point", (0.0, nan))]
+    poison = spark.createDataFrame(
+        [(10_000 + i, bytearray(geom_to_wkb(g))) + (None,) * 8
+         for i, g in enumerate(bad)], feats.schema)
+    clean = _build(spark, feats, 0, 2, 4)
+    assert _build(spark, feats.unionByName(poison), 0, 2, 4) == clean

@@ -1,8 +1,10 @@
-"""Byte parity of the vectorized point-feature framer vs the per-row
-LayerEncoder path (the partial-encode hot loop). The bulk path must
-produce bit-identical layer messages — including key/value table order —
-because golden-tile fixtures and the 1-vs-13-partition determinism
-contract pin exact bytes."""
+"""Byte parity of the vectorized point-feature framer, the group-batched
+encode (points and the ragged polygon/line tier) and the encode walk's
+(layer, family) class path vs the per-row LayerEncoder path (the
+partial-encode hot loop). The bulk paths must produce bit-identical
+layer messages — including key/value table order — because golden-tile
+fixtures and the 1-vs-13-partition determinism contract pin exact
+bytes."""
 
 import numpy as np
 import pandas as pd
@@ -32,8 +34,10 @@ def bulk_encoder(rows, ptypes):
                                    use_na_sentinel=True)
         cols.append((p, t, codes, np.asarray(uniq)))
     tags = _bulk_point_tags(enc, cols)
-    framed = mvt.bulk_frame_point_features(xs, ys, tags)
-    assert framed is not None
+    res = mvt.bulk_frame_point_features(xs, ys, tags)
+    assert res is not None
+    framed, rowlen = res
+    assert int(rowlen.sum()) == len(framed)
     enc.add_framed_features(framed)
     return enc
 
@@ -139,7 +143,7 @@ def groups_bulk(groups, prop, ptype):
         uniq = np.asarray(uniq)
     seg_starts = np.cumsum([0] + [len(g) for g in groups[:-1]]) \
         .astype(np.int64)
-    return _bulk_encode_point_groups("l", prop, ptype, xs, ys, codes,
+    return _bulk_encode_point_groups("l", prop, ptype, (xs, ys), codes,
                                      uniq, seg_starts)
 
 
@@ -196,7 +200,7 @@ def test_width_overflow_falls_back():
     assert mvt.bulk_frame_point_features(xs, ys, []) is None
 
 
-# ------------------------------------------------- ring4 polygon framer
+# ------------------------------------- 4-corner rings, ragged polygon tier
 
 def _rand_ring(rng):
     x0, x1 = sorted(int(v) for v in rng.integers(-64, 4161, 2))
@@ -222,12 +226,18 @@ def ring_groups_perrow(groups, prop, ptype):
     return parts
 
 
+def _wkb_column(geoms):
+    from tileigi_spark.geom.wkb import geom_to_wkb
+    col = np.empty(len(geoms), dtype=object)
+    col[:] = [geom_to_wkb(g) for g in geoms]
+    return col
+
+
 def ring_groups_bulk(groups, prop, ptype):
     from tileigi_spark.engine import _bulk_encode_point_groups
-    X = np.array([[p[0] for p in r[0]] for g in groups for r in g],
-                 dtype=np.int64)
-    Y = np.array([[p[1] for p in r[0]] for g in groups for r in g],
-                 dtype=np.int64)
+    from tileigi_spark.geom.ringbulk import parse_poly_family
+    coords = parse_poly_family(_wkb_column(
+        [("Polygon", [r[0] + [r[0][0]]]) for g in groups for r in g]))
     if prop is None:
         codes = uniq = None
     else:
@@ -237,8 +247,8 @@ def ring_groups_bulk(groups, prop, ptype):
         uniq = np.asarray(uniq)
     seg_starts = np.cumsum([0] + [len(g) for g in groups[:-1]]) \
         .astype(np.int64)
-    return _bulk_encode_point_groups("l", prop, ptype, X, Y, codes,
-                                     uniq, seg_starts, kind="ring4")
+    return _bulk_encode_point_groups("l", prop, ptype, coords, codes,
+                                     uniq, seg_starts, kind="genpoly")
 
 
 def test_ring4_group_batch_parity():
@@ -278,7 +288,7 @@ def test_ring5_wkb_detector():
     assert not _is_ring5_polygon_wkb(geom_to_wkb(("Point", (1, 2))))
 
 
-# --------------------------------------------------- line framer
+# ------------------------------------- 2-4 point lines, ragged line tier
 
 def _rand_line(rng):
     k = int(rng.choice([2, 2, 2, 3, 3, 4]))
@@ -299,16 +309,10 @@ def line_groups_perrow(groups, prop, ptype):
 
 def line_groups_bulk(groups, prop, ptype):
     from tileigi_spark.engine import _bulk_encode_point_groups
+    from tileigi_spark.geom.ringbulk import parse_line_family
     flat = [r for g in groups for r in g]
-    n = len(flat)
-    X = np.zeros((n, 4), dtype=np.int64)
-    Y = np.zeros((n, 4), dtype=np.int64)
-    K = np.zeros(n, dtype=np.int64)
-    for i, (pts, _) in enumerate(flat):
-        K[i] = len(pts)
-        for j, (x, y) in enumerate(pts):
-            X[i, j] = x
-            Y[i, j] = y
+    coords = parse_line_family(_wkb_column(
+        [("LineString", pts) for pts, _ in flat]))
     if prop is None:
         codes = uniq = None
     else:
@@ -317,9 +321,8 @@ def line_groups_bulk(groups, prop, ptype):
         uniq = np.asarray(uniq)
     seg_starts = np.cumsum([0] + [len(g) for g in groups[:-1]]) \
         .astype(np.int64)
-    return _bulk_encode_point_groups("l", prop, ptype, X, Y, codes,
-                                     uniq, seg_starts, kind="line",
-                                     counts=K)
+    return _bulk_encode_point_groups("l", prop, ptype, coords, codes,
+                                     uniq, seg_starts, kind="genline")
 
 
 def test_line_group_batch_parity():
@@ -341,21 +344,123 @@ def test_line_group_batch_parity():
         line_groups_perrow(groups, None, None)
 
 
-def test_short_line_wkb_detector():
-    from tileigi_spark.engine import _is_short_line_wkb
+# ------------------------------------- encode walk: (layer, family) classes
+
+MIXED_TILE = 4
+_CLASS_PTYPES = {"pois": {"name": StringType()},
+                 "areas": {"rank": LongType()},
+                 "roads": {},
+                 "misc": {"name": StringType(), "rank": LongType()}}
+
+
+def _class_batch_rows():
+    """Sorted encode-walk rows over 12 tiles: points, Polygon and
+    MultiPolygon, LineString and MultiLineString in 3 <=1-property
+    layers (one with no property), a 2-property layer, NULL values and
+    one group mixing polygon and line pieces. Feature k's first vertex
+    has x == k, so a geometry names its row."""
     from tileigi_spark.geom.wkb import geom_to_wkb
 
-    assert _is_short_line_wkb(geom_to_wkb(("LineString", [(0, 0), (5, 7)])))
-    assert _is_short_line_wkb(
-        geom_to_wkb(("LineString", [(0, 0), (5, 7), (9, 2)])))
-    assert _is_short_line_wkb(
-        geom_to_wkb(("LineString", [(0, 0), (5, 7), (9, 2), (1, 1)])))
-    # 5 points / multilinestring / polygon are rejected
-    assert not _is_short_line_wkb(
-        geom_to_wkb(("LineString",
-                     [(0, 0), (5, 7), (9, 2), (1, 1), (2, 2)])))
-    assert not _is_short_line_wkb(
-        geom_to_wkb(("MultiLineString", [[(0, 0), (5, 7)]])))
-    assert not _is_short_line_wkb(
-        geom_to_wkb(("Polygon", [[(0, 0), (4, 0), (4, 4), (0, 4),
-                                  (0, 0)]])))
+    rows, mixed = [], set()
+    k = 0
+    for tx in range(12):
+        for order, layer in enumerate(("pois", "areas", "roads", "misc")):
+            if (tx + order) % 5 == 4:
+                continue          # not every tile carries every layer
+            for j in range(1 + (tx + order) % 3):
+                if layer in ("pois", "misc"):
+                    geom = ("Point", (k, 7))
+                elif layer == "areas" and not (tx == MIXED_TILE
+                                               and j == 1):
+                    sq = [(k, 0), (k + 40, 0), (k + 40, 30), (k, 30), (k, 0)]
+                    geom = (("MultiPolygon", [[sq], [[(x, y + 50)
+                                                     for x, y in sq]]])
+                            if (tx + j) % 2 else ("Polygon", [sq]))
+                elif layer == "areas":
+                    geom = ("LineString", [(k, 0), (k + 9, 4)])
+                    mixed.add(tx)
+                else:
+                    line = [(k, 0), (k + 30, 3), (k + 31, 60)]
+                    geom = (("MultiLineString", [line, line[:2]])
+                            if j % 2 else ("LineString", line))
+                name = None if k % 4 == 1 else f"n{k % 3}"
+                rank = np.nan if k % 5 == 2 else float(k % 4)
+                rows.append((8, tx, 0, 0, order, layer,
+                             geom_to_wkb(geom), name, rank))
+                k += 1
+    assert mixed
+    return pd.DataFrame(rows, columns=["zoom", "x", "y", "salt",
+                                       "layer_order", "layer", "geom",
+                                       "name", "rank"])
+
+
+def _expected_partials(pdf):
+    from tileigi_spark.engine import _int_geom
+    from tileigi_spark.geom.wkb import wkb_to_geom
+
+    out = []
+    keys = ["zoom", "x", "y", "salt", "layer_order", "layer"]
+    for key, g in pdf.groupby(keys, sort=False):
+        enc = mvt.LayerEncoder(key[-1])
+        ptypes = _CLASS_PTYPES[key[-1]]
+        for _, r in g.iterrows():
+            enc.add_feature(_int_geom(wkb_to_geom(r["geom"])),
+                            {p: _mvt_value(r[p], t)
+                             for p, t in ptypes.items()})
+        out.append(tuple(key) + (enc.to_bytes(),))
+    return out
+
+
+def _first_x(geom):
+    data = geom[1]
+    while not isinstance(data[0], (int, float)):
+        data = data[0]
+    return int(data[0])
+
+
+def test_class_batched_encode_matches_per_row(monkeypatch):
+    """Every complete group of a batch is framed by its (layer, family)
+    class: bytes and row order equal the per-row LayerEncoder walk, a
+    group straddling the batch boundary stays one partial, and no
+    complete single-family group of a <=1-property layer reaches
+    LayerEncoder.add_feature."""
+    from tileigi_spark.engine import _make_encode_run
+    from tileigi_spark.geom.wkb import wkb_to_geom
+
+    pdf = _class_batch_rows()
+    split = int(np.flatnonzero((pdf["x"] == 6) & (pdf["layer"] == "areas"))
+                [1])   # inside a 2-row group
+    batches = [pdf.iloc[:split].reset_index(drop=True),
+               pdf.iloc[split:].reset_index(drop=True)]
+
+    per_row = []
+    add_feature = mvt.LayerEncoder.add_feature
+
+    def counting(self, geom, properties):
+        per_row.append(_first_x(geom))
+        return add_feature(self, geom, properties)
+
+    monkeypatch.setattr(mvt.LayerEncoder, "add_feature", counting)
+    run = _make_encode_run(_CLASS_PTYPES, ["name", "rank"])
+    got = pd.concat(list(run(iter(batches))), ignore_index=True)
+    monkeypatch.undo()
+
+    assert [tuple(r) for r in got.itertuples(index=False)] == \
+        _expected_partials(pdf)
+
+    # rows of groups the class path must frame: complete groups of a
+    # batch (not its first or last) in a single family of a layer with
+    # at most one property column
+    fallback = {(MIXED_TILE, "areas")} | {(tx, "misc") for tx in range(12)}
+    bulk_x = set()
+    for b in batches:
+        keys = list(zip(b["x"], b["layer"]))
+        inner = set(list(dict.fromkeys(keys))[1:-1]) - fallback
+        bulk_x |= {_first_x(wkb_to_geom(w)) for w, kk in zip(b["geom"], keys)
+                   if kk in inner}
+    assert len(bulk_x) > 20
+    assert not bulk_x & set(per_row)
+    # the mixed-family group and the 2-property layer went per row
+    assert {_first_x(wkb_to_geom(w)) for w, kk in
+            zip(pdf["geom"], zip(pdf["x"], pdf["layer"]))
+            if kk in fallback} <= set(per_row)

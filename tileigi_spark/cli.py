@@ -71,11 +71,12 @@ def main(argv=None):
     p.add_argument("--salt-zoom-max", type=int, default=4)
     p.add_argument("--n-salts", type=int, default=16)
     p.add_argument("--shuffle-parts", type=int, default=None,
-                   help="explicit partition count for the two encode "
-                        "exchanges (recommend total-cores*8; the encode "
-                        "walk is Python-bound, so wave packing decides "
-                        "wall time). Default: spark.sql.shuffle.partitions"
-                        " + AQE")
+                   help="explicit partition count for the encode "
+                        "exchanges, clamped to 2x total cores (the encode "
+                        "walk is Python-bound: fewer tasks than cores "
+                        "strand a straggler, many more pay a fixed "
+                        "per-task cost each). Default: "
+                        "spark.sql.shuffle.partitions + AQE")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession

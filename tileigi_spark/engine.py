@@ -9,7 +9,9 @@ Spark-first re-expression of the reference lifecycle (lib.rs:464-736):
       │ per-tile shift (G2-G16); vectorized numpy fast path for points
       ▼
   repartition(z,x,y,salt) + sortWithinPartitions + mapInPandas
-      — partial MVT layer encode (A1; salt breaks z0-z4 hot tiles, O13)
+      — partial MVT layer encode (A1; salt breaks z0-z4 hot tiles, O13);
+      a batch's complete groups are framed per (layer, shape family)
+      class in one vectorized call each (_make_encode_run)
   repartition(z,x,y) + sortWithinPartitions + mapInPandas
       — merge partials per layer + tile assembly + gzip + md5 (A2)
 
@@ -23,6 +25,7 @@ amortizes per-tile overhead across whole Arrow batches.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 from typing import Optional
 
@@ -65,9 +68,9 @@ from .geom.remap import shift_geom as _shift_geom  # noqa: E402
 
 def _bbox_arrays(ways):
     """Per-row bbox arrays from a WKB column (numpy fast path for simple
-    2-D points, recursive decode otherwise; NaN = undecodable)."""
-    import numpy as np
-
+    2-D points, recursive decode otherwise). NaN = undecodable, or any
+    vertex NaN/Inf: Python min/max over such a list can return a finite
+    bbox, and the geometry stage then fails the whole job on that row."""
     n = len(ways)
     out = {k: np.full(n, np.nan) for k in ("xmin", "ymin", "xmax", "ymax")}
     # vectorized path for simple 2-D points (dominant for geotagged
@@ -80,7 +83,9 @@ def _bbox_arrays(ways):
             dtype=np.uint8).reshape(-1, 21)
         xs = buf[:, 5:13].copy().view(np.float64).ravel()
         ys = buf[:, 13:21].copy().view(np.float64).ravel()
-        idx = np.nonzero(simple)[0]
+        fin = np.isfinite(xs) & np.isfinite(ys)
+        idx = np.nonzero(simple)[0][fin]
+        xs, ys = xs[fin], ys[fin]
         out["xmin"][idx] = xs; out["xmax"][idx] = xs
         out["ymin"][idx] = ys; out["ymax"][idx] = ys
     for i, w in enumerate(ways):
@@ -92,7 +97,10 @@ def _bbox_arrays(ways):
             continue
         xs, ys = [], []
         _collect_coords(g, xs, ys)
-        if xs:
+        # a finite sum means every vertex is finite; only a sum that
+        # overflowed needs the per-vertex check
+        if xs and (math.isfinite(sum(xs) + sum(ys))
+                   or all(map(math.isfinite, xs + ys))):
             out["xmin"][i] = min(xs); out["ymin"][i] = min(ys)
             out["xmax"][i] = max(xs); out["ymax"][i] = max(ys)
     return out
@@ -107,7 +115,6 @@ def with_bbox(features_df: DataFrame, way_col: str = "way") -> DataFrame:
     boundary and decodes its WKB twice (two ArrowEvalPython nodes,
     verified by tools/plan_audit.py; the audit now pins this to one
     Python pass)."""
-    import numpy as np
     from pyspark.sql.types import StructType, StructField
 
     out_schema = StructType(features_df.schema.fields + [
@@ -201,7 +208,13 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
             & (F.col("xmin") <= F.lit(ax1 + slack))
             & (F.col("ymax") >= F.lit(ay0 - slack))
             & (F.col("ymin") <= F.lit(ay1 + slack)))
-    df = feats.withColumn("zoom", F.explode(F.array(*[F.lit(z) for z in zooms])))
+    # The zoom explode and the metatile-range columns are built as SQL
+    # text: each F.* call is a py4j round trip, and the ~20 of them per
+    # layer dominated plan-building time. Doubles are written as
+    # repr(x) + "D" literals, so the parsed trees equal the Column-API
+    # ones (same operation order, same bit-exact constants).
+    df = feats.withColumn(
+        "zoom", F.expr(f"explode(array({', '.join(map(str, zooms))}))"))
     if zoom_filter:
         df = df.filter(F.expr(zoom_filter))
     if bbox_merc is not None:
@@ -228,27 +241,29 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
                                            + pad_z)))
             cond = c if cond is None else cond | c
         df = df.filter(cond)
-    two_z_l = F.expr("shiftleft(1L, zoom)")
-    two_z = two_z_l.cast("double")
-    size_mt = F.least(F.lit(metatile_scale).cast("long"), two_z_l)
-    n_axis = (two_z_l / size_mt).cast("long")
-    mt_merc = F.lit(WORLD) * size_mt.cast("double") / two_z
-    tile_merc = F.lit(WORLD) / two_z
+    two_z_l = "shiftleft(1L, zoom)"
+    two_z = f"CAST({two_z_l} AS DOUBLE)"
+    size_mt = f"least(CAST({metatile_scale} AS BIGINT), {two_z_l})"
+    n_axis = f"CAST(({two_z_l} / {size_mt}) AS BIGINT)"
+    world, merc = repr(WORLD) + "D", repr(MERC_MAX) + "D"
+    mt_merc = f"(({world} * CAST({size_mt} AS DOUBLE)) / {two_z})"
     # clip-buffer in mercator units + one tile unit of rounding slack
-    buf_m = tile_merc * F.lit((buffer_px * 16 + 1) / 4096.0)
+    buf_m = (f"(({world} / {two_z}) * "
+             f"{repr((buffer_px * 16 + 1) / 4096.0)}D)")
 
     def clamp(c):
-        return F.greatest(F.lit(0).cast("long"),
-                          F.least(c.cast("long"), n_axis - 1))
+        return (f"greatest(CAST(0 AS BIGINT), "
+                f"least(CAST(floor({c} / {mt_merc}) AS BIGINT), "
+                f"({n_axis} - 1)))")
 
-    mx0 = clamp(F.floor((F.col("xmin") - buf_m + F.lit(MERC_MAX)) / mt_merc))
-    mx1 = clamp(F.floor((F.col("xmax") + buf_m + F.lit(MERC_MAX)) / mt_merc))
-    my0 = clamp(F.floor((F.lit(MERC_MAX) - (F.col("ymax") + buf_m)) / mt_merc))
-    my1 = clamp(F.floor((F.lit(MERC_MAX) - (F.col("ymin") - buf_m)) / mt_merc))
-
+    mx0 = clamp(f"((xmin - {buf_m}) + {merc})")
+    mx1 = clamp(f"((xmax + {buf_m}) + {merc})")
+    my0 = clamp(f"({merc} - (ymax + {buf_m}))")
+    my1 = clamp(f"({merc} - (ymin - {buf_m}))")
     covered = (df
-               .withColumn("mtx", F.explode(F.sequence(mx0, mx1)))
-               .withColumn("mty", F.explode(F.sequence(my0, my1))))
+               .withColumn("mtx", F.expr(f"explode(sequence({mx0}, {mx1}))"))
+               .withColumn("mty",
+                           F.expr(f"explode(sequence({my0}, {my1}))")))
     if bbox_merc is not None:
         ranges = {z: bbox_metatile_range(bbox_merc, z, metatile_scale)
                   for z in zooms}
@@ -369,7 +384,6 @@ def _is_simple_point_wkb(w) -> bool:
 
 
 _RING5_HEADER = bytes([1, 3, 0, 0, 0, 1, 0, 0, 0, 5, 0, 0, 0])
-_RING5_MULTI_HEADER = bytes([1, 6, 0, 0, 0, 1, 0, 0, 0]) + _RING5_HEADER
 
 
 def _is_ring5_polygon_wkb(w) -> bool:
@@ -378,34 +392,6 @@ def _is_ring5_polygon_wkb(w) -> bool:
     and last point bytes directly."""
     return (w is not None and len(w) == 93
             and w[:13] == _RING5_HEADER and w[13:29] == w[77:93])
-
-
-_LINE_HEADERS = {41: bytes([1, 2, 0, 0, 0, 2, 0, 0, 0]),
-                 57: bytes([1, 2, 0, 0, 0, 3, 0, 0, 0]),
-                 73: bytes([1, 2, 0, 0, 0, 4, 0, 0, 0])}
-
-
-def _is_short_line_wkb(w) -> bool:
-    """Single LineString WKB with 2-4 points (41/57/73 bytes) — the
-    shape of ~94% of clipped polyline pieces."""
-    if w is None:
-        return False
-    h = _LINE_HEADERS.get(len(w))
-    return h is not None and w[:9] == h
-
-
-def _is_ring5_geom_wkb(w) -> bool:
-    """_is_ring5_polygon_wkb, or its MultiPolygon-of-one twin (102
-    bytes — what make_valid emits for repaired-winding rects). Both
-    produce the identical MVT command stream (MVT has one POLYGON type;
-    a single-member MultiPolygon frames exactly like the Polygon), so
-    the bulk encoder accepts either."""
-    if w is None:
-        return False
-    if len(w) == 93:
-        return w[:13] == _RING5_HEADER and w[13:29] == w[77:93]
-    return (len(w) == 102 and w[:22] == _RING5_MULTI_HEADER
-            and w[22:38] == w[86:102])
 
 
 # cache-resident slice size for the rect lane, same lever as the ragged
@@ -662,45 +648,72 @@ def _bulk_point_tags(enc, cols):
     return prop_tags
 
 
-def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
-                              codes, uniques, seg_starts, kind="point",
-                              counts=None):
-    """Encode MANY complete single-shape groups of one layer in one
-    vectorized pass (zero or one property column). kind="point": xs/ys
-    are int64 coord vectors; kind="ring4": xs/ys are (n, 4) int64 ring
-    corner matrices (closed 5-point polygons, closing point dropped);
-    kind="line": xs/ys are (n, 4) padded point matrices with counts
-    (n,) in [2, 4]. Returns the list of finished layer-message bytes,
-    one per group (seg_starts order), or None when a varint-width bound
-    is exceeded (caller falls back).
+# MVT geometry type of each bulk-framer family; the encode walk classes
+# every piece WKB into one of these (0 = no bulk framer, per-row only)
+_KIND_GTYPE = {"point": 1, "genline": 2, "genpoly": 3}
+_GTYPE_KIND = {g: k for k, g in _KIND_GTYPE.items()}
+_WKB_TYPE_GTYPE = {1: 1, 2: 2, 5: 2, 3: 3, 6: 3}
+
+
+def _wkb_gtype(g) -> int:
+    """Bulk-framer family of one piece WKB as its MVT geometry type: 1 a
+    simple 2-D point, 2 a (Multi)LineString, 3 a (Multi)Polygon, 0
+    anything else (MultiPoint, collections, non-LE or Z/M headers)."""
+    if g is None or len(g) < 9 or g[0] != 1 or g[2] or g[3] or g[4]:
+        return 0
+    t = _WKB_TYPE_GTYPE.get(g[1], 0)
+    return 0 if (t == 1 and len(g) != 21) else t
+
+
+def _parse_family(geoms, kind):
+    """Decode a run of same-family piece WKBs into the input of
+    _frame_family: (xs, ys) int64 vectors for points, the ragged
+    (xs, ys, ring_off, feat_off) arrays for polygons and lines. None
+    when a polygon/line row is malformed (caller goes per-row)."""
+    if kind == "point":
+        buf = np.frombuffer(b"".join(geoms), dtype=np.uint8).reshape(-1, 21)
+        return (buf[:, 5:13].copy().view(np.float64).ravel().astype(np.int64),
+                buf[:, 13:21].copy().view(np.float64).ravel()
+                .astype(np.int64))
+    if kind == "genpoly":
+        return ringbulk.parse_poly_family(geoms)
+    return ringbulk.parse_line_family(geoms)
+
+
+def _frame_family(coords, kind, prop_tags):
+    """(stream, per-feature frame lengths) for parsed coords, or None on
+    a framer width bound (caller goes per-row)."""
+    if kind == "point":
+        return mvt.bulk_frame_point_features(*coords, prop_tags)
+    return ringbulk.bulk_frame_ragged_features(*coords, _KIND_GTYPE[kind],
+                                               prop_tags)
+
+
+def _bulk_encode_point_groups(layer_name, prop, ptype, coords,
+                              codes, uniques, seg_starts, kind="point"):
+    """Encode MANY complete single-family groups of one layer in one
+    vectorized pass (zero or one property column). coords is the
+    _parse_family output for `kind` ("point", "genpoly" or "genline")
+    over all rows of all groups. Returns the list of finished
+    layer-message bytes, one per group (seg_starts order), or None when
+    a varint-width bound is exceeded (caller falls back).
 
     Per-group LayerEncoder work is ~100µs of interpreter/numpy-call
-    overhead; at z10 the bench has 650k groups of ~16 features, so the
-    per-group constant dominates the encode stage. This path computes
-    group-local value-table ranks for the whole batch with one
-    unique/lexsort, frames every feature through the shared byte-matrix
-    writer, then assembles each group's message from slices — O(rows)
-    vectorized + O(groups) cheap joins. Bytes are identical to the
-    per-row LayerEncoder output (pinned by tests/test_mvt_bulk.py and
-    the golden-tile fixtures).
+    overhead, and a multi-layer or high-zoom batch holds thousands of
+    groups of one to a few features, so the per-group constant
+    dominates the encode stage. This path computes group-local
+    value-table ranks for the whole batch with one unique/lexsort,
+    frames every feature through the shared byte-matrix writer, then
+    assembles each group's message from slices by the framer's
+    per-feature frame lengths — O(rows) vectorized + O(groups) cheap
+    joins. Bytes are identical to the per-row LayerEncoder output
+    (pinned by tests/test_mvt_bulk.py and the golden-tile fixtures).
 
-    xs, ys: int64 tile-local coords for all rows of all groups.
     codes/uniques: pd.factorize of the property column over these rows
     (codes -1 = NULL), or None when the layer has no property column.
     seg_starts: int64 array of group start offsets (first element 0).
-
-    kind="genpoly"/"genline": xs is the (xs, ys, ring_off, feat_off)
-    tuple from geom.ringbulk's parsers (ys unused); rows are whole
-    polygon/linestring features of arbitrary shape, framed by the
-    ragged writer which also returns exact per-feature frame lengths.
     """
-    n = (len(xs[3]) - 1) if kind in ("genpoly", "genline") else len(xs)
     nseg = len(seg_starts)
-    seg_ends = np.append(seg_starts[1:], n)
-    gid = np.zeros(n, dtype=np.int64)
-    gid[seg_starts[1:]] = 1
-    gid = np.cumsum(gid)
-
     header = (mvt._tag(15, 0) + mvt._varint(2)
               + mvt._len_delim(1, layer_name.encode("utf-8")))
     extbytes = mvt._tag(5, 0) + mvt._varint(4096)
@@ -711,6 +724,10 @@ def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
         valtabs = {}
         keybytes = b""
     else:
+        n = len(codes)
+        gid = np.zeros(n, dtype=np.int64)
+        gid[seg_starts[1:]] = 1
+        gid = np.cumsum(gid)
         keybytes = mvt._len_delim(3, prop.encode("utf-8"))
         K = max(len(uniques), 1)
         valid = codes >= 0
@@ -739,13 +756,12 @@ def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
         has_valid[gid[idx]] = True
         # per-group value tables, in first-appearance order
         vbytes = [None] * len(uniques)
-        pair_codes_sorted = (u_pairs % K)[order]
+        pair_codes_sorted = (u_pairs % K)[order].tolist()
         valtabs = {}
-        bounds = np.append(grp_start, len(order))
-        for i in range(len(grp_start)):
-            g = int(sorted_g[grp_start[i]])
+        bounds = np.append(grp_start, len(order)).tolist()
+        for i, g in enumerate(sorted_g[grp_start].tolist()):
             chunks = []
-            for c in pair_codes_sorted[bounds[i]:bounds[i + 1]].tolist():
+            for c in pair_codes_sorted[bounds[i]:bounds[i + 1]]:
                 b = vbytes[c]
                 if b is None:
                     b = mvt._len_delim(
@@ -754,83 +770,20 @@ def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
                 chunks.append(b)
             valtabs[g] = b"".join(chunks)
 
-    def _assemble(stream, cum):
-        # one group-message assembly for every kind: frame slices by
-        # byte offset, per-group value table only when a tag is present
-        parts = []
-        for g in range(nseg):
-            seg = stream[cum[seg_starts[g]]:cum[seg_ends[g]]]
-            if codes is not None and has_valid[g]:
-                parts.append(header + seg + keybytes + valtabs[g]
-                             + extbytes)
-            else:
-                parts.append(header + seg + extbytes)
-        return parts
-
-    if kind in ("genpoly", "genline"):
-        res = ringbulk.bulk_frame_ragged_features(
-            *xs, 3 if kind == "genpoly" else 2, prop_tags)
-        if res is None:
-            return None
-        stream, rowlen = res
-        return _assemble(stream,
-                         np.concatenate(([0], np.cumsum(rowlen))))
-    if kind == "point":
-        stream = mvt.bulk_frame_point_features(xs, ys, prop_tags)
-    elif kind == "line":
-        stream = mvt.bulk_frame_line_features(xs, ys, counts, prop_tags)
-    else:
-        stream = mvt.bulk_frame_ring4_polygon_features(xs, ys, prop_tags)
-    if stream is None:
+    res = _frame_family(coords, kind, prop_tags)
+    if res is None:
         return None
-    # per-row frame lengths -> group byte offsets
-    # recompute widths the same way the framer did (cheap, avoids a
-    # second return value): frame = 1 + fnb + body
-    if kind == "point":
-        zzx = ((xs << 1) ^ (xs >> 63)).astype(np.uint64)
-        zzy = ((ys << 1) ^ (ys >> 63)).astype(np.uint64)
-        xnb = (1 + (zzx >= 0x80).astype(np.int64)
-               + (zzx >= 0x4000).astype(np.int64))
-        ynb = (1 + (zzy >= 0x80).astype(np.int64)
-               + (zzy >= 0x4000).astype(np.int64))
-        geom_len = 1 + xnb + ynb
-    else:
-        dX = np.empty((n, 4), dtype=np.int64)
-        dY = np.empty((n, 4), dtype=np.int64)
-        dX[:, 0] = xs[:, 0]
-        dX[:, 1:] = xs[:, 1:] - xs[:, :-1]
-        dY[:, 0] = ys[:, 0]
-        dY[:, 1:] = ys[:, 1:] - ys[:, :-1]
-        zz = np.empty((n, 8), dtype=np.int64)
-        zz[:, 0::2] = (dX << 1) ^ (dX >> 63)
-        zz[:, 1::2] = (dY << 1) ^ (dY >> 63)
-        if kind == "line":
-            uzz = np.repeat(
-                np.arange(4)[None, :] < counts[:, None], 2, axis=1)
-            zz = np.where(uzz, zz, 0)
-        zz = zz.astype(np.uint64)
-        dnb = (1 + (zz >= 0x80).astype(np.int64)
-               + (zz >= 0x4000).astype(np.int64))
-        if kind == "line":
-            dnb = np.where(uzz, dnb, 0)
-            geom_len = 2 + dnb.sum(axis=1)
-        else:
-            geom_len = 3 + dnb.sum(axis=1)
-    pair_len = np.zeros(n, dtype=np.int64)
-    for _, vi_a, valid_a in prop_tags:
-        vnb = (1 + (vi_a >= 0x80).astype(np.int64)
-               + (vi_a >= 0x4000).astype(np.int64))
-        pair_len += valid_a * (1 + vnb)
-    has_tags = pair_len > 0
-    body_len = has_tags * (2 + pair_len) + 2 + 2 + geom_len
-    fnb = 1 + (body_len >= 0x80).astype(np.int64)
-    rowlen = 1 + fnb + body_len
+    stream, rowlen = res
     cum = np.concatenate(([0], np.cumsum(rowlen)))
-    if cum[-1] != len(stream):
-        # width recomputation drifted from the framer — never slice a
-        # misaligned stream; per-row path is always correct
-        return None
-    return _assemble(stream, cum)
+    cut = cum[np.append(seg_starts, len(rowlen))].tolist()
+    parts = []
+    for g, tagged in enumerate(has_valid.tolist()):
+        seg = stream[cut[g]:cut[g + 1]]
+        if tagged:
+            parts.append(header + seg + keybytes + valtabs[g] + extbytes)
+        else:
+            parts.append(header + seg + extbytes)
+    return parts
 
 
 def _mvt_value(v, t):
@@ -855,7 +808,21 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
     """The sorted-stream partial-layer encode walk as a reusable
     mapInPandas function (shared by the salted two-shuffle path and the
     fused salt-free path — the walk itself is salt-agnostic: salt is
-    just one more run-break column, constant 0 in the fused stream)."""
+    just one more run-break column, constant 0 in the fused stream).
+
+    Each Arrow batch splits into groups, one per contiguous (tile, salt,
+    layer) run, and each group becomes one partial-layer row. The first
+    and last group of a batch may continue across the batch boundary,
+    so they go through the stateful encoder (handle_segment). Every
+    complete group in between is classed by (layer, shape family) —
+    point, polygon/multipolygon, line/multiline — and each class whose
+    layer has at most one property column is framed in ONE
+    _bulk_encode_point_groups call, however its groups interleave with
+    other layers' groups (a multi-layer tile stream changes layer every
+    group or two). Mixed-family groups, layers with more than one
+    property column and framer width overflows get a fresh per-group
+    LayerEncoder. Partial rows leave in the original sorted group order,
+    which the fused assemble walk relies on."""
 
     def run(iterator):
         cur_key = None
@@ -883,29 +850,11 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             ly_codes, ly_uniq = pd.factorize(pdf["layer"])
             geoms = pdf["geom"].values
             pvals = {p: pdf[p].values for p in all_props if p in pdf}
-            pt_ok = np.fromiter((_is_simple_point_wkb(g) for g in geoms),
-                                dtype=bool, count=n)
-            rp_ok = np.fromiter(
-                (_is_ring5_geom_wkb(g) for g in geoms),
-                dtype=bool, count=n)
-            ln_ok = np.fromiter(
-                (_is_short_line_wkb(g) for g in geoms),
-                dtype=bool, count=n)
-            # family masks for the ragged bulk framer (any polygon /
-            # any linestring WKB — the general tier below the three
-            # fixed-width fast shapes)
-            fam = np.fromiter(
-                ((g[1] if (g is not None and len(g) >= 9 and g[0] == 1
-                           and g[2] == 0 and g[3] == 0 and g[4] == 0)
-                  else 0) for g in geoms), dtype=np.uint8, count=n)
-            gp_ok = (fam == 3) | (fam == 6)
-            gl_ok = (fam == 2) | (fam == 5)
+            fam = np.fromiter(map(_wkb_gtype, geoms), dtype=np.int64,
+                              count=n)
             # per-batch value dictionaries for the vectorized paths
             fact = ({p: pd.factorize(pdf[p], use_na_sentinel=True)
-                     for p in pvals}
-                    if (pt_ok.any() or rp_ok.any() or ln_ok.any()
-                        or gp_ok.any() or gl_ok.any())
-                    else {})
+                     for p in pvals} if fam.any() else {})
 
             chg = np.empty(n, dtype=bool)
             chg[0] = True
@@ -917,58 +866,29 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             starts = np.flatnonzero(chg)
             ends = np.append(starts[1:], n)
 
-            def point_coords(s, e):
-                buf = np.frombuffer(b"".join(geoms[s:e]),
-                                    dtype=np.uint8).reshape(-1, 21)
-                px = (buf[:, 5:13].copy().view(np.float64)
-                      .ravel().astype(np.int64))
-                py = (buf[:, 13:21].copy().view(np.float64)
-                      .ravel().astype(np.int64))
-                return px, py
-
-            def ring4_coords(s, e):
-                # single-ring 5-point polygons (93 B) or their
-                # MultiPolygon-of-one twins (102 B, ring at offset 22):
-                # closing point dropped -> (m, 4) corner matrices
-                g = geoms[s:e]
-                m = e - s
-                lens = np.fromiter((len(v) for v in g), np.int64, m)
-                X = np.empty((m, 4), dtype=np.int64)
-                Y = np.empty((m, 4), dtype=np.int64)
-                for ln, off in ((93, 13), (102, 22)):
-                    sel = np.flatnonzero(lens == ln)
-                    if not len(sel):
-                        continue
-                    buf = np.frombuffer(
-                        b"".join(g[i] for i in sel),
-                        dtype=np.uint8).reshape(-1, ln)
-                    pts = (buf[:, off:off + 80].copy().view("<f8")
-                           .reshape(-1, 5, 2).astype(np.int64))
-                    X[sel] = pts[:, :4, 0]
-                    Y[sel] = pts[:, :4, 1]
-                return X, Y
-
-            def line_coords(s, e):
-                # 2-4 point LineStrings (41/57/73 B): padded (m, 4)
-                # point matrices + per-row counts
-                g = geoms[s:e]
-                m = e - s
-                lens = np.fromiter((len(v) for v in g), np.int64, m)
-                X = np.zeros((m, 4), dtype=np.int64)
-                Y = np.zeros((m, 4), dtype=np.int64)
-                K = (lens - 9) // 16
-                for k in (2, 3, 4):
-                    sel = np.flatnonzero(K == k)
-                    if not len(sel):
-                        continue
-                    buf = np.frombuffer(
-                        b"".join(g[i] for i in sel),
-                        dtype=np.uint8).reshape(-1, 9 + 16 * k)
-                    pts = (buf[:, 9:].copy().view("<f8")
-                           .reshape(-1, k, 2).astype(np.int64))
-                    X[sel, :k] = pts[:, :, 0]
-                    Y[sel, :k] = pts[:, :, 1]
-                return X, Y, K
+            def add_rows(enc, s, e):
+                # rows [s, e) of enc's layer: one vectorized frame when
+                # the run is >= 8 rows of one family (interning values in
+                # per-row visit order; falls back on width overflow),
+                # else the per-row encoder
+                ptypes = prop_types.get(enc.name, {})
+                kind = _GTYPE_KIND.get(int(fam[s]))
+                if (e - s >= 8 and kind is not None
+                        and bool((fam[s:e] == fam[s]).all())):
+                    coords = _parse_family(geoms[s:e], kind)
+                    if coords is not None:
+                        seg_cols = [(p, t, fact[p][0][s:e], fact[p][1])
+                                    for p, t in ptypes.items() if p in fact]
+                        res = _frame_family(coords, kind,
+                                            _bulk_point_tags(enc, seg_cols))
+                        if res is not None:
+                            enc.add_framed_features(res[0])
+                            return
+                for i in range(s, e):
+                    geom = _int_geom(wkb_to_geom(bytes(geoms[i])))
+                    properties = {p: _mvt_value(pvals[p][i], t)
+                                  for p, t in ptypes.items() if p in pvals}
+                    enc.add_feature(geom, properties)
 
             def handle_segment(s, e):
                 nonlocal cur_key, enc
@@ -979,132 +899,63 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
                     flush()
                     cur_key = key
                     enc = mvt.LayerEncoder(layer)
-                ptypes = prop_types.get(layer, {})
-                framed = None
-                if e - s >= 8:
-                    # vectorized single-shape run: decode coords as one
-                    # matrix, intern values in per-row visit order, frame
-                    # via the byte-matrix path (falls back on width
-                    # overflow); the ragged tier catches every polygon /
-                    # linestring the fixed-width shapes don't
-                    coords = ragged = None
-                    if bool(pt_ok[s:e].all()):
-                        coords, framer = (point_coords(s, e),
-                                          mvt.bulk_frame_point_features)
-                    elif bool(rp_ok[s:e].all()):
-                        coords, framer = (
-                            ring4_coords(s, e),
-                            mvt.bulk_frame_ring4_polygon_features)
-                    elif bool(ln_ok[s:e].all()):
-                        coords, framer = (line_coords(s, e),
-                                          mvt.bulk_frame_line_features)
-                    elif bool(gp_ok[s:e].all()):
-                        ragged = (ringbulk.parse_poly_family(geoms[s:e]), 3)
-                    elif bool(gl_ok[s:e].all()):
-                        ragged = (ringbulk.parse_line_family(geoms[s:e]), 2)
-                    if coords is not None or (ragged is not None
-                                              and ragged[0] is not None):
-                        seg_cols = [(p, t, fact[p][0][s:e], fact[p][1])
-                                    for p, t in ptypes.items() if p in fact]
-                        prop_tags = _bulk_point_tags(enc, seg_cols)
-                        if ragged is not None:
-                            res = ringbulk.bulk_frame_ragged_features(
-                                *ragged[0], ragged[1], prop_tags)
-                            framed = res[0] if res is not None else None
-                        else:
-                            framed = framer(*coords, prop_tags)
-                if framed is not None:
-                    enc.add_framed_features(framed)
-                    return
-                for i in range(s, e):
-                    geom = _int_geom(wkb_to_geom(bytes(geoms[i])))
-                    properties = {p: _mvt_value(pvals[p][i], t)
-                                  for p, t in ptypes.items() if p in pvals}
-                    enc.add_feature(geom, properties)
+                add_rows(enc, s, e)
 
-            # batch-wide fast path: every COMPLETE group in this batch
-            # (all but the first and last, which may continue across
-            # batch/encoder boundaries) encoded in one vectorized pass
-            # when they are all-point rows of one <=1-property layer —
-            # the per-group constant, not per-feature work, dominates at
-            # high zooms (650k groups of ~16 features in the bench)
-            done_fast = False
-            if len(starts) >= 3:
-                m0, m1 = int(ends[0]), int(starts[-1])
-                mid_kind = None
-                if bool(pt_ok[m0:m1].all()):
-                    mid_kind = "point"
-                elif bool(rp_ok[m0:m1].all()):
-                    mid_kind = "ring4"
-                elif bool(ln_ok[m0:m1].all()):
-                    mid_kind = "line"
-                elif bool(gp_ok[m0:m1].all()):
-                    mid_kind = "genpoly"
-                elif bool(gl_ok[m0:m1].all()):
-                    mid_kind = "genline"
-                mid_ok = (mid_kind is not None
-                          and bool((ly_codes[m0:m1]
-                                    == ly_codes[m0]).all()))
-                ptl = None
-                if mid_ok:
-                    layer = ly_uniq[ly_codes[m0]]
-                    ptl = [(p, t)
-                           for p, t in prop_types.get(layer, {}).items()
+            def complete_group_parts(gs, ge):
+                # a group's family is its rows' common family, 0 if mixed
+                gfam = np.minimum.reduceat(fam[:ge[-1]], gs)
+                gfam[gfam != np.maximum.reduceat(fam[:ge[-1]], gs)] = 0
+                gly = ly_codes[gs]
+                parts = [None] * len(gs)
+                for cls in np.unique(gly * 4 + gfam).tolist():
+                    lc, f = divmod(cls, 4)
+                    layer = ly_uniq[lc]
+                    ptl = [(p, t) for p, t in prop_types.get(layer, {}).items()
                            if p in fact]
-                    mid_ok = len(ptl) <= 1
-                if mid_ok:
-                    kcounts = None
-                    py = None
-                    if mid_kind == "point":
-                        px, py = point_coords(m0, m1)
-                    elif mid_kind == "ring4":
-                        px, py = ring4_coords(m0, m1)
-                    elif mid_kind == "line":
-                        px, py, kcounts = line_coords(m0, m1)
-                    elif mid_kind == "genpoly":
-                        px = ringbulk.parse_poly_family(geoms[m0:m1])
-                    else:
-                        px = ringbulk.parse_line_family(geoms[m0:m1])
-                    if ptl:
-                        p, t = ptl[0]
-                        codes, uniq = fact[p][0][m0:m1], fact[p][1]
-                    else:
-                        p = t = codes = uniq = None
-                    seg_starts = (starts[1:-1] - m0).astype(np.int64)
-                    parts = (None if px is None else
-                             _bulk_encode_point_groups(
-                                 layer, p, t, px, py, codes, uniq,
-                                 seg_starts, kind=mid_kind,
-                                 counts=kcounts))
-                    if parts is not None:
-                        handle_segment(int(starts[0]), m0)
-                        flush()
-                        cur_key = None
-                        enc = None
-                        mids = starts[1:-1]
-                        out["zoom"].extend(zs[mids].tolist())
-                        out["x"].extend(txs[mids].tolist())
-                        out["y"].extend(tys[mids].tolist())
-                        out["salt"].extend(ss[mids].tolist())
-                        out["layer_order"].extend(lo[mids].tolist())
-                        out["layer"].extend([layer] * len(mids))
-                        out["part"].extend(parts)
-                        # bulk extend can add ~1 row/group at high zooms:
-                        # drain here so peak buffering stays near the
-                        # 2000-row bound rather than maxRecordsPerBatch
-                        if len(out["zoom"]) >= 2000:
-                            yield pd.DataFrame(out)
-                            for v in out.values():
-                                v.clear()
-                        handle_segment(m1, n)
-                        done_fast = True
-            if not done_fast:
-                for s, e in zip(starts.tolist(), ends.tolist()):
-                    handle_segment(s, e)
-                    if len(out["zoom"]) >= 2000:
-                        yield pd.DataFrame(out)
-                        for v in out.values():
-                            v.clear()
+                    if f == 0 or len(ptl) > 1:
+                        continue
+                    sel = np.flatnonzero((gly == lc) & (gfam == f))
+                    lens = ge[sel] - gs[sel]
+                    seg_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+                    rows = (np.repeat(gs[sel] - seg_starts, lens)
+                            + np.arange(int(lens.sum())))
+                    kind = _GTYPE_KIND[f]
+                    coords = _parse_family(geoms[rows], kind)
+                    if coords is None:
+                        continue
+                    p, t = ptl[0] if ptl else (None, None)
+                    codes, uniq = ((fact[p][0][rows], fact[p][1]) if ptl
+                                   else (None, None))
+                    res = _bulk_encode_point_groups(layer, p, t, coords,
+                                                    codes, uniq, seg_starts,
+                                                    kind)
+                    if res is not None:
+                        for i, b in zip(sel.tolist(), res):
+                            parts[i] = b
+                for i, b in enumerate(parts):
+                    if b is None:
+                        genc = mvt.LayerEncoder(ly_uniq[ly_codes[gs[i]]])
+                        add_rows(genc, int(gs[i]), int(ge[i]))
+                        parts[i] = genc.to_bytes()
+                return parts
+
+            handle_segment(int(starts[0]), int(ends[0]))
+            if len(starts) > 2:
+                flush()
+                cur_key = enc = None
+                gs, ge = starts[1:-1], ends[1:-1]
+                out["zoom"].extend(zs[gs].tolist())
+                out["x"].extend(txs[gs].tolist())
+                out["y"].extend(tys[gs].tolist())
+                out["salt"].extend(ss[gs].tolist())
+                out["layer_order"].extend(lo[gs].tolist())
+                out["layer"].extend(ly_uniq[ly_codes[gs]].tolist())
+                out["part"].extend(complete_group_parts(gs, ge))
+            if len(starts) > 1:
+                handle_segment(int(starts[-1]), n)
+            # a batch can add ~1 row per group: drain here so peak
+            # buffering stays near the 2000-row bound rather than
+            # maxRecordsPerBatch
             if len(out["zoom"]) >= 2000:
                 yield pd.DataFrame(out)
                 for v in out.values():
@@ -1134,11 +985,12 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
     shuffle_parts: explicit partition count for the exchange. The encode
     walk is Python-bound, so wave packing dominates wall time: with
     partitions ~= cores, one straggler task idles every other core
-    (measured 5.3/8 cores busy at 14 tasks); at ~4-8x cores the tail is
-    1/8 of a wave (7.8/8 busy). AQE's parallelismFirst coalescing
-    actively re-creates the coarse case, so callers that know their
-    core count should pass cores*8 (bench.py does); None keeps the
-    spark.sql.shuffle.partitions + AQE behavior.
+    (measured 5.3/8 cores busy at 14 tasks), and AQE's parallelismFirst
+    coalescing actively re-creates that coarse case. build_tiles clamps
+    the value to 2x cores (_python_stage_parts: more tasks pay a fixed
+    per-task cost each), so a caller's cores*8 — what bench.py passes —
+    runs as cores*2; None keeps the spark.sql.shuffle.partitions + AQE
+    behavior.
     """
     salt_col = (F.when(F.col("zoom") <= F.lit(salt_zoom_max),
                        F.pmod(F.col("feature_id"), F.lit(n_salts))

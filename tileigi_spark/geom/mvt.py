@@ -138,10 +138,12 @@ def bulk_frame_point_features(xs, ys, prop_tags):
     prop_tags: list of (ki, vi_array int64, valid_mask bool) in the key
     order the per-row path visits; indices must already be interned.
 
-    Returns the concatenation of
+    Returns (stream_bytes, per_feature_frame_lengths), where the stream
+    is the concatenation of
     ``_len_delim(2, encode_feature(("Point", (x, y)), tags))`` for every
     row — byte-identical to the per-row path — or None when a value
     exceeds the vectorized varint widths (caller falls back to per-row).
+    Same contract as ringbulk.bulk_frame_ragged_features.
 
     Strategy: write every potential byte of every frame into an
     (n, W) uint8 matrix with a parallel used-byte mask; masked row-major
@@ -230,230 +232,7 @@ def bulk_frame_point_features(xs, ys, prop_tags):
     B[:, c + 4] = ynb > 1
     M[:, c + 5] = yb2
     B[:, c + 5] = ynb > 2
-    return M[B].tobytes()
-
-
-def bulk_frame_ring4_polygon_features(X, Y, prop_tags):
-    """Vectorized framing of a run of single-ring 4-corner polygon
-    features (closed 5-point rings with the closing point dropped — the
-    dominant shape for clipped box/rectangle layers).
-
-    X, Y: (n, 4) int64 tile-local ring corners in emit order.
-    prop_tags: as in bulk_frame_point_features.
-
-    Returns the concatenation of
-    ``_len_delim(2, encode_feature(("Polygon", [ring]), tags))`` for
-    every row — byte-identical to the per-row path (geometry stream:
-    MoveTo p0, LineTo p1..p3, ClosePath) — or None when a varint-width
-    bound is exceeded."""
-    import numpy as np
-
-    n = len(X)
-    P = len(prop_tags)
-    if P > 31:
-        return None  # tags-payload 1-byte varint bound (4P < 128)
-
-    # per-feature cursor starts at (0,0); deltas interleaved per pair
-    dX = np.empty((n, 4), dtype=np.int64)
-    dY = np.empty((n, 4), dtype=np.int64)
-    dX[:, 0] = X[:, 0]
-    dX[:, 1:] = X[:, 1:] - X[:, :-1]
-    dY[:, 0] = Y[:, 0]
-    dY[:, 1:] = Y[:, 1:] - Y[:, :-1]
-    zz = np.empty((n, 8), dtype=np.int64)
-    zz[:, 0::2] = (dX << 1) ^ (dX >> 63)
-    zz[:, 1::2] = (dY << 1) ^ (dY >> 63)
-    zz = zz.astype(np.uint64)
-    if n and int(zz.max()) >= (1 << 21):
-        return None
-
-    vparts = []
-    for ki, vi, valid in prop_tags:
-        if ki >= 128:
-            return None
-        vi = np.where(valid, vi, 0).astype(np.uint64)
-        if n and int(vi.max()) >= (1 << 21):
-            return None
-        vparts.append(_varint3_parts(vi))
-
-    db0, db1, db2, dnb = _varint3_parts(zz.ravel())
-    db0 = db0.reshape(n, 8)
-    db1 = db1.reshape(n, 8)
-    db2 = db2.reshape(n, 8)
-    dnb = dnb.reshape(n, 8)
-
-    pair_len = np.zeros(n, dtype=np.int64)
-    for (_, _, valid), (_, _, _, vnb) in zip(prop_tags, vparts):
-        pair_len += valid * (1 + vnb)
-    has_tags = pair_len > 0
-    geom_len = 3 + dnb.sum(axis=1)      # MoveTo + LineTo + ClosePath + deltas
-    body_len = has_tags * (2 + pair_len) + 2 + 2 + geom_len
-    if n and int(body_len.max()) >= (1 << 14):
-        return None
-    fb0, fb1, _, fnb = _varint3_parts(body_len.astype(np.uint64))
-
-    W = 5 + 4 * P + 5 + 6 + 1 + 18 + 1
-    M = np.zeros((n, W), dtype=np.uint8)
-    B = np.zeros((n, W), dtype=bool)
-    M[:, 0] = 0x12                      # frame: field 2, wire 2
-    B[:, 0] = True
-    M[:, 1] = fb0
-    B[:, 1] = True
-    M[:, 2] = fb1
-    B[:, 2] = fnb > 1
-    M[:, 3] = 0x12                      # tags: field 2, wire 2
-    B[:, 3] = has_tags
-    M[:, 4] = pair_len.astype(np.uint8)
-    B[:, 4] = has_tags
-    c = 5
-    for (ki, _, valid), (vb0, vb1, vb2, vnb) in zip(prop_tags, vparts):
-        M[:, c] = ki
-        B[:, c] = valid
-        M[:, c + 1] = vb0
-        B[:, c + 1] = valid
-        M[:, c + 2] = vb1
-        B[:, c + 2] = valid & (vnb > 1)
-        M[:, c + 3] = vb2
-        B[:, c + 3] = valid & (vnb > 2)
-        c += 4
-    M[:, c] = 0x18                      # type: field 3, wire 0
-    B[:, c] = True
-    M[:, c + 1] = 0x03                  # POLYGON
-    B[:, c + 1] = True
-    M[:, c + 2] = 0x22                  # geometry: field 4, wire 2
-    B[:, c + 2] = True
-    M[:, c + 3] = geom_len.astype(np.uint8)   # always < 128 (<= 27)
-    B[:, c + 3] = True
-    M[:, c + 4] = 0x09                  # MoveTo, count 1
-    B[:, c + 4] = True
-    c += 5
-    for j in range(8):
-        if j == 2:
-            M[:, c] = 0x1A              # LineTo, count 3
-            B[:, c] = True
-            c += 1
-        M[:, c] = db0[:, j]
-        B[:, c] = True
-        M[:, c + 1] = db1[:, j]
-        B[:, c + 1] = dnb[:, j] > 1
-        M[:, c + 2] = db2[:, j]
-        B[:, c + 2] = dnb[:, j] > 2
-        c += 3
-    M[:, c] = 0x0F                      # ClosePath
-    B[:, c] = True
-    return M[B].tobytes()
-
-
-def bulk_frame_line_features(X, Y, K, prop_tags):
-    """Vectorized framing of a run of single-LineString features with
-    2..4 points (the shape of ~94% of clipped road/river pieces: a
-    4-point source polyline sliced at tile borders).
-
-    X, Y: (n, 4) int64 point matrices, padded past K[i]; K: (n,) point
-    counts in [2, 4]. Returns the concatenation of
-    ``_len_delim(2, encode_feature(("LineString", pts), tags))`` per
-    row — byte-identical to the per-row path (MoveTo p0, LineTo
-    p1..p{k-1}) — or None on a varint-width bound."""
-    import numpy as np
-
-    n = len(X)
-    P = len(prop_tags)
-    if P > 31:
-        return None
-    K = K.astype(np.int64)
-    if n and (int(K.min()) < 2 or int(K.max()) > 4):
-        return None
-
-    dX = np.empty((n, 4), dtype=np.int64)
-    dY = np.empty((n, 4), dtype=np.int64)
-    dX[:, 0] = X[:, 0]
-    dX[:, 1:] = X[:, 1:] - X[:, :-1]
-    dY[:, 0] = Y[:, 0]
-    dY[:, 1:] = Y[:, 1:] - Y[:, :-1]
-    zz = np.empty((n, 8), dtype=np.int64)
-    zz[:, 0::2] = (dX << 1) ^ (dX >> 63)
-    zz[:, 1::2] = (dY << 1) ^ (dY >> 63)
-    used = (np.arange(4)[None, :] < K[:, None])      # point used
-    uzz = np.repeat(used, 2, axis=1)                 # delta pair used
-    zz = np.where(uzz, zz, 0).astype(np.uint64)
-    if n and int(zz.max()) >= (1 << 21):
-        return None
-
-    vparts = []
-    for ki, vi, valid in prop_tags:
-        if ki >= 128:
-            return None
-        vi = np.where(valid, vi, 0).astype(np.uint64)
-        if n and int(vi.max()) >= (1 << 21):
-            return None
-        vparts.append(_varint3_parts(vi))
-
-    db0, db1, db2, dnb = _varint3_parts(zz.ravel())
-    db0 = db0.reshape(n, 8)
-    db1 = db1.reshape(n, 8)
-    db2 = db2.reshape(n, 8)
-    dnb = np.where(uzz, dnb.reshape(n, 8), 0)
-
-    pair_len = np.zeros(n, dtype=np.int64)
-    for (_, _, valid), (_, _, _, vnb) in zip(prop_tags, vparts):
-        pair_len += valid * (1 + vnb)
-    has_tags = pair_len > 0
-    geom_len = 2 + dnb.sum(axis=1)      # MoveTo + LineTo + used deltas
-    body_len = has_tags * (2 + pair_len) + 2 + 2 + geom_len
-    if n and int(body_len.max()) >= (1 << 14):
-        return None
-    fb0, fb1, _, fnb = _varint3_parts(body_len.astype(np.uint64))
-
-    W = 5 + 4 * P + 5 + 6 + 1 + 18
-    M = np.zeros((n, W), dtype=np.uint8)
-    B = np.zeros((n, W), dtype=bool)
-    M[:, 0] = 0x12
-    B[:, 0] = True
-    M[:, 1] = fb0
-    B[:, 1] = True
-    M[:, 2] = fb1
-    B[:, 2] = fnb > 1
-    M[:, 3] = 0x12
-    B[:, 3] = has_tags
-    M[:, 4] = pair_len.astype(np.uint8)
-    B[:, 4] = has_tags
-    c = 5
-    for (ki, _, valid), (vb0, vb1, vb2, vnb) in zip(prop_tags, vparts):
-        M[:, c] = ki
-        B[:, c] = valid
-        M[:, c + 1] = vb0
-        B[:, c + 1] = valid
-        M[:, c + 2] = vb1
-        B[:, c + 2] = valid & (vnb > 1)
-        M[:, c + 3] = vb2
-        B[:, c + 3] = valid & (vnb > 2)
-        c += 4
-    M[:, c] = 0x18
-    B[:, c] = True
-    M[:, c + 1] = 0x02                  # LINESTRING
-    B[:, c + 1] = True
-    M[:, c + 2] = 0x22
-    B[:, c + 2] = True
-    M[:, c + 3] = geom_len.astype(np.uint8)   # <= 26 < 128
-    B[:, c + 3] = True
-    M[:, c + 4] = 0x09                  # MoveTo, count 1
-    B[:, c + 4] = True
-    c += 5
-    for j in range(8):
-        if j == 2:
-            # LineTo, count K-1 (1..3)
-            M[:, c] = (((K - 1) << 3) | 2).astype(np.uint8)
-            B[:, c] = True
-            c += 1
-        uj = uzz[:, j]
-        M[:, c] = db0[:, j]
-        B[:, c] = uj
-        M[:, c + 1] = db1[:, j]
-        B[:, c + 1] = uj & (dnb[:, j] > 1)
-        M[:, c + 2] = db2[:, j]
-        B[:, c + 2] = uj & (dnb[:, j] > 2)
-        c += 3
-    return M[B].tobytes()
+    return M[B].tobytes(), B.sum(axis=1)
 
 
 def encode_feature(geom, tags) -> bytes:

@@ -1,16 +1,12 @@
 """Ragged bulk MVT framing for arbitrary polygon / linestring features.
 
-The fixed-width bulk framers in geom/mvt.py cover the three dominant
-piece shapes (single points, 4-corner rings, 2-4 point lines) with a
-byte-matrix writer whose width is known up front. Everything else —
-irregular rings, rings with holes, MultiPolygons, long polylines — fell
-back to the per-row LayerEncoder walk (~50-100µs of interpreter work
-per feature), which is the remaining hot cost of polygon-dense
-workloads (reference diet: lib.rs:559-728 renders arbitrary admin /
-landuse rings).
-
-This module removes that fallback for the whole polygon and linestring
-families with a RAGGED formulation: all features' emit-order vertices
+The point framer in geom/mvt.py writes single points with a byte-matrix
+writer whose width is known up front. Every polygon and linestring —
+boxes, irregular rings, rings with holes, MultiPolygons, polylines of
+any length — is framed here instead of by the per-row LayerEncoder walk
+(~50-100µs of interpreter work per feature, the hot cost of
+polygon-dense workloads; reference diet: lib.rs:559-728 renders
+arbitrary admin / landuse rings), with a RAGGED formulation: all features' emit-order vertices
 live in one flat (xs, ys) pair plus two offset arrays
 
     ring_off : (nr + 1,) vertex offsets per ring
